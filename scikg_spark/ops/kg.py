@@ -153,8 +153,10 @@ def load_synonyms(spark, path: str = _SYNONYMS_PATH):
             for t in nid2tuple.values()]
     # Arrow local relation (driver-side conversion) — the list form would
     # parallelize through Python-RDD tasks just to ship a tiny dimension
+    # (set here so the plan does not depend on how the session was built)
     import pandas as pd
 
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=["phrase_a", "phrase_b"]),
         schema="phrase_a string, phrase_b string")
@@ -209,7 +211,8 @@ def kg_triples(spark, sf_dir, prefer_snapshot: bool = True):
 
 def attach_entities(tuples, phrase_map, broadcast_threshold: int = BROADCAST_MAP_ROWS,
                     map_rows: int | None = None):
-    """Join subject/object entity ids onto the tuples frame.
+    """Join subject/object entity ids onto the tuples frame: every tuple
+    column plus ``subj_entity`` and ``obj_entity`` (NULL when unmapped).
 
     ``map_rows`` (pass the count cached alongside the checkpointed dimension
     when you have it — ``_linked`` does) picks the join strategy without a
@@ -220,26 +223,20 @@ def attach_entities(tuples, phrase_map, broadcast_threshold: int = BROADCAST_MAP
     :func:`scikg_spark.pipeline.skew.salted_join` (left-join safe), the
     documented skew strategy for broadcast-ineligible hot-key dimensions.
     """
-    src = phrase_map.select(
-        F.col("phrase").alias("_sp"), F.col("entity_id").alias("subj_entity"))
-    dst = phrase_map.select(
-        F.col("phrase").alias("_op"), F.col("entity_id").alias("obj_entity"))
+    from scikg_spark.pipeline.skew import salted_join
+
     if map_rows is None:
         map_rows = phrase_map.count()
-    if map_rows <= broadcast_threshold:
-        joined = (
-            tuples.join(F.broadcast(src), tuples["s_c.text"] == F.col("_sp"), "left")
-            .join(F.broadcast(dst), tuples["o_c.text"] == F.col("_op"), "left")
-        )
-    else:
-        from scikg_spark.pipeline.skew import salted_join
-
-        big = tuples.withColumn("_sp", F.col("s_c.text")) \
-                    .withColumn("_op", F.col("o_c.text"))
-        joined = salted_join(salted_join(big, src, "_sp", how="left"),
-                             dst, "_op", how="left")
-    return joined.select("doc_id", "stmt_id", "kind", "subj", "pred", "obj",
-                         "subj_entity", "obj_entity")
+    joined = tuples.withColumn("_sp", F.col("s_c.text")) \
+                   .withColumn("_op", F.col("o_c.text"))
+    for key, entity in (("_sp", "subj_entity"), ("_op", "obj_entity")):
+        dim = phrase_map.select(F.col("phrase").alias(key),
+                                F.col("entity_id").alias(entity))
+        if map_rows <= broadcast_threshold:
+            joined = joined.join(F.broadcast(dim), key, "left")
+        else:
+            joined = salted_join(joined, dim, key, how="left")
+    return joined.drop("_sp", "_op")
 
 
 def kg_entity_nodes(spark, sf_dir, prefer_snapshot: bool = True):
@@ -265,7 +262,9 @@ def kg_entity_edges(spark, sf_dir, prefer_snapshot: bool = True):
             return spark.read.parquet(snap)
     t = _tuples(spark, sf_dir)
     _, phrase_map, map_rows = _linked(spark, sf_dir)
-    return attach_entities(t, phrase_map, map_rows=map_rows)
+    return attach_entities(t, phrase_map, map_rows=map_rows).select(
+        "doc_id", "stmt_id", "kind", "subj", "pred", "obj",
+        "subj_entity", "obj_entity")
 
 
 # ---------------------------------------------------------------------------

@@ -13,11 +13,19 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from scikg_spark.ops.kg import attach_entities
 from scikg_spark.pipeline.fused import extract_tuples
 from scikg_spark.pipeline.stage1 import extract_statements
-from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
 from scikg_spark.pipeline.stage3 import link_entities
 from scikg_spark.pipeline.stage4 import SnapshotCatalog
+
+
+def _edges(tuples: DataFrame, phrase_map: DataFrame) -> DataFrame:
+    """tuples + subject/object entity ids, with Iceberg's bucket(url)
+    partition transform expressed directly: co-locates a url's edges and
+    bounds files-per-partition at scale."""
+    return attach_entities(tuples, phrase_map).withColumn(
+        "url_bucket", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
 
 
 def run_pipeline(
@@ -59,16 +67,11 @@ def run_pipeline(
     statements = stage(
         "statements", lambda: extract_statements(pages, lang=lang))
 
-    def build_tuples():
-        if tagger == "rule":
-            # fused single-Python-pass (tag+correct+decode); chained
-            # mapInPandas would run 2 workers per task slot (see fused.py)
-            return extract_tuples(statements, **corrections)
-        return decode_tuples(
-            tag_statements(statements, mode=tagger, gold=gold,
-                           weights_path=weights_path, **corrections))
-
-    tuples = stage("tuples", build_tuples, partition_by=("kind",))
+    tuples = stage(
+        "tuples",
+        lambda: extract_tuples(statements, tagger=tagger, gold=gold,
+                               weights_path=weights_path, **corrections),
+        partition_by=("kind",))
 
     # stage 3 produces two tables from one computation; resume only when BOTH
     # are committed. Otherwise recompute once and FORCE-commit both — serving
@@ -85,40 +88,8 @@ def run_pipeline(
         nodes = stage("entity_nodes", lambda: linked_nodes, force=True)
         phrase_map = stage("entity_map", lambda: linked_map, force=True)
 
-    def build_edges():
-        src_map = phrase_map.select(
-            F.col("phrase").alias("_sp"), F.col("entity_id").alias("subj_entity"))
-        dst_map = phrase_map.select(
-            F.col("phrase").alias("_op"), F.col("entity_id").alias("obj_entity"))
-        # same skew discipline as ops.kg.attach_entities: a dimension-sized
-        # phrase map broadcasts (hot mention strings never concentrate on one
-        # reducer); an over-threshold map takes the salted-join path
-        from scikg_spark.ops.kg import BROADCAST_MAP_ROWS
-
-        if phrase_map.count() <= BROADCAST_MAP_ROWS:
-            joined = (
-                tuples.join(F.broadcast(src_map),
-                            tuples["s_c.text"] == F.col("_sp"), "left")
-                .join(F.broadcast(dst_map),
-                      tuples["o_c.text"] == F.col("_op"), "left")
-            )
-        else:
-            from scikg_spark.pipeline.skew import salted_join
-
-            big = tuples.withColumn("_sp", F.col("s_c.text")) \
-                        .withColumn("_op", F.col("o_c.text"))
-            joined = salted_join(salted_join(big, src_map, "_sp", how="left"),
-                                 dst_map, "_op", how="left")
-        return (
-            joined
-            .drop("_sp", "_op")
-            # Iceberg's bucket(url) partition transform, expressed directly:
-            # co-locates a url's edges and bounds files-per-partition at scale
-            .withColumn("url_bucket",
-                        F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
-        )
-
-    stage("edges", build_edges, partition_by=("kind", "url_bucket"))
+    stage("edges", lambda: _edges(tuples, phrase_map),
+          partition_by=("kind", "url_bucket"))
     return out
 
 
@@ -178,12 +149,8 @@ def run_pipeline_incremental(
         new_pages = new_pages.join(F.broadcast(done), "url", "left_anti")
 
     new_statements = extract_statements(new_pages, lang=lang)
-    if tagger == "rule":
-        new_tuples = extract_tuples(new_statements, **corrections)
-    else:
-        new_tuples = decode_tuples(
-            tag_statements(new_statements, mode=tagger, gold=gold,
-                           weights_path=weights_path, **corrections))
+    new_tuples = extract_tuples(new_statements, tagger=tagger, gold=gold,
+                                weights_path=weights_path, **corrections)
 
     out: dict[str, DataFrame] = {}
     counts: dict[str, int] = {}
@@ -210,29 +177,7 @@ def run_pipeline_incremental(
     out["entity_nodes"] = catalog.read("entity_nodes")
     out["entity_map"] = phrase_map = catalog.read("entity_map")
 
-    src_map = phrase_map.select(
-        F.col("phrase").alias("_sp"), F.col("entity_id").alias("subj_entity"))
-    dst_map = phrase_map.select(
-        F.col("phrase").alias("_op"), F.col("entity_id").alias("obj_entity"))
-    from scikg_spark.ops.kg import BROADCAST_MAP_ROWS
-
-    if phrase_map.count() <= BROADCAST_MAP_ROWS:
-        joined = (
-            tuples.join(F.broadcast(src_map),
-                        tuples["s_c.text"] == F.col("_sp"), "left")
-            .join(F.broadcast(dst_map),
-                  tuples["o_c.text"] == F.col("_op"), "left")
-        )
-    else:
-        from scikg_spark.pipeline.skew import salted_join
-
-        big = tuples.withColumn("_sp", F.col("s_c.text")) \
-                    .withColumn("_op", F.col("o_c.text"))
-        joined = salted_join(salted_join(big, src_map, "_sp", how="left"),
-                             dst_map, "_op", how="left")
-    edges = (joined.drop("_sp", "_op")
-             .withColumn("url_bucket",
-                         F.pmod(F.xxhash64("url"), F.lit(16)).cast("int")))
+    edges = _edges(tuples, phrase_map)
     catalog.write(edges, "edges", partition_by=("kind", "url_bucket"))
     out["edges"] = catalog.read("edges")
     return {"tables": out, **counts}

@@ -26,6 +26,7 @@ STATEMENTS_SCHEMA = (
     "url string, doc_id string, stmt_id int, "
     "words array<string>, postags array<string>, caps array<string>"
 )
+STATEMENTS_COLS = ["url", "doc_id", "stmt_id", "words", "postags", "caps"]
 
 
 def build_pages_from_documents(documents: DataFrame, lang: str | None = None) -> DataFrame:
@@ -71,35 +72,41 @@ def build_fetch_log(documents: DataFrame) -> DataFrame:
         F.explode(variants).alias("url"), "doc_id")
 
 
+def _page_statements(url, html):
+    """One page -> ``(doc_id, stmt_id, words, postags, caps)`` per text line
+    that parses as an annotated statement; stmt_id is the 1-based line."""
+    doc_id = url.rsplit("/", 1)[-1]
+    for i, line in enumerate(extract_text(html).split("\n")):
+        if not line:
+            continue
+        try:
+            words, postags, caps = parse_annotated(line, lower=False)
+        except (ValueError, AssertionError):
+            continue  # non-statement line (e.g. page title/boilerplate)
+        yield doc_id, i + 1, words, postags, caps
+
+
+def statements_frame(pages_pdf: pd.DataFrame) -> pd.DataFrame:
+    """A pandas batch of ``(url, html)`` pages -> its statements batch."""
+    return pd.DataFrame(
+        [(url, *stmt) for url, html in zip(pages_pdf["url"], pages_pdf["html"])
+         for stmt in _page_statements(url, html)],
+        columns=STATEMENTS_COLS)
+
+
 def extract_statements(pages: DataFrame, lang: str | None = "en") -> DataFrame:
     """pages -> one row per statement with aligned token arrays."""
     if lang is not None:
         pages = pages.filter(F.col("lang") == lang)
-    src = pages.select("url", "html")
 
     def gen(batches):
         for pdf in batches:
-            out = {k: [] for k in ("url", "doc_id", "stmt_id", "words", "postags", "caps")}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                text = extract_text(html)
-                doc_id = url.rsplit("/", 1)[-1]
-                for i, line in enumerate(text.split("\n")):
-                    if not line:
-                        continue
-                    try:
-                        words, postags, caps = parse_annotated(line, lower=False)
-                    except (ValueError, AssertionError):
-                        continue  # non-statement line (e.g. page title/boilerplate)
-                    out["url"].append(url)
-                    out["doc_id"].append(doc_id)
-                    out["stmt_id"].append(i + 1)
-                    out["words"].append(words)
-                    out["postags"].append(postags)
-                    out["caps"].append(caps)
-            if out["url"]:
-                yield pd.DataFrame(out)
+            out = statements_frame(pdf)
+            if len(out):
+                yield out
 
-    return src.mapInPandas(gen, schema=STATEMENTS_SCHEMA)
+    return pages.select("url", "html").mapInPandas(
+        gen, schema=STATEMENTS_SCHEMA)
 
 
 def verify_extraction(pages: DataFrame) -> int:

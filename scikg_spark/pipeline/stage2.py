@@ -1,37 +1,25 @@
-"""Stage 2: statements -> tagged statements -> exploded tuples.
+"""Stage 2: statements -> tagged statements (tags only).
 
-Tagging, correction (AR/TC/SH/DEL as pipeline flags, mirroring
-self_train/self_train.py:49-53) and tuple decoding (post_decode,
-utils.py:1046-1351) all run inside ONE mapInPandas pass with broadcast-sized
-rule state in the closure — no shuffle, no per-row Python.
-
-Inside each Arrow batch the pandas slice is sorted by token count descending
-before the (future) neural forward pass — the reference's padding-efficiency
-sort (MIMO_Extractor.py:71-79) recast as intra-batch locality; it never
-causes a cluster-wide sort.
+Tagging and correction (AR/TC/SH/DEL as pipeline flags, mirroring
+self_train/self_train.py:49-53) run inside ONE mapInPandas pass through the
+shared kernel in :mod:`scikg_spark.pipeline.fused`, with broadcast-sized
+rule state in the closure — no shuffle, no per-row Python outside the
+batch loop. Consumers that want tuples call ``fused.extract_tuples``, which
+decodes in the same pass; this module serves the consumers that need the
+tags themselves (training, pseudo-labeling, tag-level evaluation).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from scikg_spark.core.correct import ARCorrecter, correct_tags
-from scikg_spark.core.decoder import NIL, post_decode
-from scikg_spark.core.serialize import serialize_tuple
-from scikg_spark.core.tagger import rule_tag
+from scikg_spark.core.correct import ARCorrecter
+from scikg_spark.pipeline.fused import make_tagger, tagged_rows, tagger_input
 
 TAGGED_SCHEMA = (
     "url string, doc_id string, stmt_id int, "
     "words array<string>, postags array<string>, caps array<string>, "
     "fact_tags array<string>, cond_tags array<string>"
-)
-
-_SPAN = "struct<text:string,start:int,end:int>"
-TUPLES_SCHEMA = (
-    "url string, doc_id string, stmt_id int, kind string, tuple_idx int, "
-    "subj string, pred string, obj string, "
-    f"s_c {_SPAN}, s_a {_SPAN}, p {_SPAN}, o_c {_SPAN}, o_a {_SPAN}"
 )
 
 
@@ -49,129 +37,26 @@ def tag_statements(
     """Attach ``fact_tags``/``cond_tags``.
 
     mode='gold': broadcast-join pre-collapsed gold rows on (doc_id, stmt_id)
-    — the P/R gate path. mode='rule': deterministic mention-role tagger.
-    Correction flags drop statements exactly like the reference's
-    pseudo-labeling filter chain (self_train.py:117-203).
+    — the P/R gate path. mode='rule': deterministic mention-role tagger;
+    'probe'/'neural'/'ensemble': the model taggers. Correction flags drop
+    statements exactly like the reference's pseudo-labeling filter chain
+    (self_train.py:117-203).
     """
-    if weights_path is not None and mode not in ("neural", "probe", "ensemble"):
-        raise ValueError(
-            "weights_path requires mode='neural', 'probe' or 'ensemble'")
-    if mode == "probe" and weights_path is None:
-        raise ValueError("probe mode needs a trained weights_path")
-    if mode == "gold":
-        if gold is None:
-            raise ValueError("gold mode needs a gold DataFrame")
-        tagged = statements.join(
-            F.broadcast(gold.select("doc_id", "stmt_id", "fact_tags", "cond_tags")),
-            on=["doc_id", "stmt_id"],
-            how="inner",
-        ).select(
-            "url", "doc_id", "stmt_id", "words", "postags", "caps",
-            "fact_tags", "cond_tags")
-    elif mode == "rule":
-        def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue  # empty batches degrade list cols to float64 (Arrow)
-                fact_col, cond_col = [], []
-                for words, postags, caps in zip(pdf["words"], pdf["postags"], pdf["caps"]):
-                    ft, ct = rule_tag(list(words), list(postags), list(caps))
-                    fact_col.append(ft)
-                    cond_col.append(ct)
-                pdf = pdf.assign(fact_tags=fact_col, cond_tags=cond_col)
-                yield pdf
-
-        tagged = statements.mapInPandas(gen, schema=TAGGED_SCHEMA)
-    elif mode in ("neural", "ensemble", "probe"):
-        def gen(batches):
-            # built once per Python worker; in production the weight dict is
-            # an sc.broadcast and this constructor loads from it
-            from scikg_spark.core.neural import (
-                MimoEnsemble, MimoTagger, ProbeTagger, ensemble_from_weights,
-                tagger_from_weights)
-
-            if mode == "probe":
-                model = ProbeTagger.load(weights_path)
-            elif mode == "neural" and weights_path is not None:
-                # the checkpoint's own flags decide the model config
-                model = tagger_from_weights(weights_path)
-            elif mode == "ensemble" and weights_path is not None:
-                model = ensemble_from_weights(weights_path)
-            else:
-                model = MimoEnsemble() if mode == "ensemble" else MimoTagger()
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                preds = model.predict_tags(
-                    [list(w) for w in pdf["words"]],
-                    [list(p) for p in pdf["postags"]],
-                    [list(c) for c in pdf["caps"]])
-                pdf = pdf.assign(
-                    fact_tags=[p[0] for p in preds],
-                    cond_tags=[p[1] for p in preds])
-                yield pdf
-
-        tagged = statements.mapInPandas(gen, schema=TAGGED_SCHEMA)
-    else:
-        raise ValueError(f"unknown tagger mode {mode!r}")
-
-    if ar is not None or use_tc or use_tcdel or use_sh or use_del:
-        def correct_gen(batches):
-            for pdf in batches:
-                keep = []
-                fact_col, cond_col = [], []
-                for idx, (words, postags, ft, ct) in enumerate(
-                        zip(pdf["words"], pdf["postags"], pdf["fact_tags"], pdf["cond_tags"])):
-                    res = correct_tags(
-                        list(ft), list(ct),
-                        [w.lower() for w in words], list(postags),
-                        ar=ar, use_tc=use_tc, use_tcdel=use_tcdel,
-                        use_sh=use_sh, use_del=use_del)
-                    if res is None:
-                        continue
-                    keep.append(idx)
-                    fact_col.append(res[0])
-                    cond_col.append(res[1])
-                if not keep:
-                    continue
-                out = pdf.iloc[keep].copy()
-                out["fact_tags"] = fact_col
-                out["cond_tags"] = cond_col
-                yield out
-
-        tagged = tagged.mapInPandas(correct_gen, schema=TAGGED_SCHEMA)
-
-    return tagged
-
-
-def _span_dict(slot):
-    if slot == NIL:
-        return None
-    return {"text": slot[0], "start": slot[1], "end": slot[2]}
-
-
-def decode_tuples(tagged: DataFrame) -> DataFrame:
-    """tagged statements -> one row per decoded fact/condition tuple."""
+    corrections = dict(ar=ar, use_tc=use_tc, use_tcdel=use_tcdel,
+                       use_sh=use_sh, use_del=use_del)
+    src = tagger_input(statements, mode, gold, weights_path, corrections)
 
     def gen(batches):
-        cols = ["url", "doc_id", "stmt_id", "kind", "tuple_idx",
-                "subj", "pred", "obj", "s_c", "s_a", "p", "o_c", "o_a"]
+        tagger = make_tagger(mode, weights_path)
         for pdf in batches:
-            rows = []
-            for url, doc_id, stmt_id, words, ft, ct in zip(
-                    pdf["url"], pdf["doc_id"], pdf["stmt_id"],
-                    pdf["words"], pdf["fact_tags"], pdf["cond_tags"]):
-                words = list(words)
-                for kind, tags in (("f", list(ft)), ("c", list(ct))):
-                    for idx, rec in enumerate(post_decode(words, tags)):
-                        subj, pred, obj = serialize_tuple(rec)
-                        rows.append((
-                            url, doc_id, stmt_id, kind, idx + 1,
-                            subj, pred, obj,
-                            _span_dict(rec[0]), _span_dict(rec[1]),
-                            _span_dict(rec[2]), _span_dict(rec[3]),
-                            _span_dict(rec[4])))
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+            if not len(pdf):
+                continue  # empty batches degrade list cols to float64 (Arrow)
+            keep, fact, cond = [], [], []
+            for i, _, ft, ct in tagged_rows(pdf, tagger, corrections):
+                keep.append(i)
+                fact.append(ft)
+                cond.append(ct)
+            if keep:
+                yield pdf.iloc[keep].assign(fact_tags=fact, cond_tags=cond)
 
-    return tagged.mapInPandas(gen, schema=TUPLES_SCHEMA)
+    return src.mapInPandas(gen, schema=TAGGED_SCHEMA)

@@ -169,6 +169,9 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
     # Arrow batches ON THE DRIVER and the executors decode pure JVM.
     import pandas as pd
 
+    # the Arrow path is what makes this a LocalTableScan; set it here so the
+    # plan does not depend on how the session was built
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     mapping = spark.createDataFrame(
         pd.DataFrame(
             {"id": [int(n) for n in parent],

@@ -44,10 +44,9 @@ def digest(df) -> list:
     return [n, str(total if total is not None else 0)]
 
 
-def compute_all(spark) -> dict:
-    return {sf: {name: digest(q(spark, os.path.join(TESTDATA, sf)))
-                 for name, q in _queries().items()}
-            for sf in SFS}
+def digests(spark, sf: str) -> dict:
+    return {name: digest(q(spark, os.path.join(TESTDATA, sf)))
+            for name, q in _queries().items()}
 
 
 @pytest.fixture(scope="module")
@@ -58,9 +57,7 @@ def golden():
 
 @pytest.mark.parametrize("sf", SFS)
 def test_rows_only_queries_match_golden(spark, golden, sf):
-    got = {name: digest(q(spark, os.path.join(TESTDATA, sf)))
-           for name, q in _queries().items()}
-    assert got == golden[sf]
+    assert digests(spark, sf) == golden[sf]
 
 
 def test_digest_detects_one_row_change(spark, golden):
@@ -81,9 +78,9 @@ if __name__ == "__main__":
     from scikg_spark.pipeline.session import get_spark
 
     spark = get_spark(app_name="golden-digests", cores=4, shuffle_partitions=8)
-    digests = compute_all(spark)
+    table = {sf: digests(spark, sf) for sf in SFS}
     with open(GOLDEN, "w") as fh:
-        json.dump(digests, fh, indent=2, sort_keys=True)
+        json.dump(table, fh, indent=2, sort_keys=True)
         fh.write("\n")
-    print(json.dumps(digests, indent=2, sort_keys=True))
+    print(json.dumps(table, indent=2, sort_keys=True))
     spark.stop()

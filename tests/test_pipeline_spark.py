@@ -15,7 +15,8 @@ from scikg_spark.pipeline.stage1 import (
     extract_statements,
     verify_extraction,
 )
-from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
+from scikg_spark.pipeline.fused import extract_tuples
+from scikg_spark.pipeline.stage2 import tag_statements
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -24,8 +25,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def gold_run(spark, eval_blocks):
     pages, gold, oracle = gold_frames_from_blocks(spark, eval_blocks)
     stmts = extract_statements(pages)
-    tagged = tag_statements(stmts, mode="gold", gold=gold)
-    tuples = decode_tuples(tagged).cache()
+    tuples = extract_tuples(stmts, tagger="gold", gold=gold).cache()
     rows = tuples.collect()
     return pages, oracle, rows
 
@@ -84,13 +84,13 @@ class TestRulePath:
         pages = build_pages_from_documents(docs).cache()
         assert verify_extraction(pages) == 0
         stmts = extract_statements(pages)
-        tuples = decode_tuples(tag_statements(stmts, mode="rule"))
+        tuples = extract_tuples(stmts)
         rows = tuples.collect()
         assert len(rows) > 0
         kinds = {r.kind for r in rows}
         assert kinds == {"f", "c"}
         # deterministic: rerun produces the identical multiset
-        rows2 = decode_tuples(tag_statements(stmts, mode="rule")).collect()
+        rows2 = extract_tuples(stmts).collect()
         key = lambda r: (r.url, r.stmt_id, r.kind, r.tuple_idx, r.subj, r.pred, r.obj)
         assert sorted(map(key, rows)) == sorted(map(key, rows2))
 
@@ -106,7 +106,7 @@ class TestTrainCorpusGate:
     def test_train_triples_match_reference_decode(self, spark, train_blocks):
         pages, gold, oracle = gold_frames_from_blocks(spark, train_blocks)
         stmts = extract_statements(pages)
-        rows = decode_tuples(tag_statements(stmts, mode="gold", gold=gold)).collect()
+        rows = extract_tuples(stmts, tagger="gold", gold=gold).collect()
         got = Counter(
             (r.doc_id, r.stmt_id, r.kind, r.subj, r.pred, r.obj) for r in rows)
         want = Counter()

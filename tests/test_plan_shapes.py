@@ -105,7 +105,7 @@ def test_link_entities_evaluates_upstream_once(spark):
         acc.add(1)
         return f"Concept_{v}"
 
-    spy_udf = F.udf(spy, T.StringType())
+    spy_udf = F.udf(spy, T.StringType()).asNondeterministic()
     n = 40
     base = spark.range(n).select(
         F.struct(spy_udf(F.col("id")).alias("text")).alias("s_c"),
@@ -119,3 +119,33 @@ def test_link_entities_evaluates_upstream_once(spark):
     # (8x at 32), so the 1.5x bound fails any recomputation regression
     # while leaving slack for a stray retried task
     assert acc.value <= 1.5 * n, f"source evaluated {acc.value / n:.1f}x"
+
+
+def test_extraction_is_one_python_pass(spark, tmp_path):
+    """Tag, correct and decode run in exactly one MapInPandas for every
+    tagger, corrections on; stage 2's tags-only pass is one MapInPandas
+    too (a correction flag used to chain a second one)."""
+    from scikg_spark.core.neural import ProbeTagger
+    from scikg_spark.pipeline.fused import extract_tuples
+    from scikg_spark.pipeline.gold import GOLD_DDL
+    from scikg_spark.pipeline.stage1 import STATEMENTS_SCHEMA
+    from scikg_spark.pipeline.stage2 import tag_statements
+
+    # a statements source with no Python in its plan (LocalTableScan)
+    stmts = spark.createDataFrame(
+        [("https://example.org/doc/1", "1", 1, ["Cells", "grow"],
+          ["NNS", "VBP"], ["C", "O"])], schema=STATEMENTS_SCHEMA)
+    probe = str(tmp_path / "probe.npz")
+    ProbeTagger(seed=1).save(probe)
+    gold = spark.createDataFrame([("1", 1, ["O", "O"], ["O", "O"])],
+                                 schema=GOLD_DDL)
+    on = {"use_tc": True, "use_sh": True, "use_del": True}
+    frames = {
+        "rule": extract_tuples(stmts, **on),
+        "probe": extract_tuples(stmts, tagger="probe", weights_path=probe, **on),
+        "gold": extract_tuples(stmts, tagger="gold", gold=gold, **on),
+        "tag_statements": tag_statements(stmts, mode="rule", use_tc=True),
+    }
+    for name, df in frames.items():
+        plan = _formatted(df)
+        assert _n_ops(plan, "MapInPandas") == 1, (name, plan)

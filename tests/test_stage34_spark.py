@@ -52,11 +52,11 @@ class TestLinking:
 
     def test_link_entities_end_to_end(self, spark):
         from scikg_spark.pipeline.stage1 import extract_statements
-        from scikg_spark.pipeline.stage2 import decode_tuples, tag_statements
+        from scikg_spark.pipeline.fused import extract_tuples
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(80)
-        tuples = decode_tuples(tag_statements(
-            extract_statements(build_pages_from_documents(docs)), mode="rule"))
+        tuples = extract_tuples(
+            extract_statements(build_pages_from_documents(docs)))
         nodes, phrase_map = link_entities(tuples)
         n_phrases = mention_phrases(tuples).count()
         assert phrase_map.count() == n_phrases  # every phrase mapped
@@ -181,7 +181,7 @@ class TestResume:
 
 class TestSynonymEdges:
     def test_synonyms_merge_components(self, spark):
-        from scikg_spark.pipeline.stage2 import TUPLES_SCHEMA
+        from scikg_spark.pipeline.fused import TUPLES_SCHEMA
 
         def span(text, start):
             return {"text": text, "start": start, "end": start + 1}

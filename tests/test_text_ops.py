@@ -166,13 +166,13 @@ def test_new_ops_handle_empty_corpus(spark, tmp_path):
         assert len(df.columns) >= 2, fn.__name__
 
 
-def test_contamination_eval_planted(spark, tmp_path):
-    """Plant an 8-gram from the REAL eval corpus (stmts-eval.tsv) in one
-    corpus doc; q_contamination_eval must flag exactly that doc."""
+def _assert_flags_planted_doc(spark, tmp_path, tsv_path):
+    """Plant the first 8-gram of ``tsv_path``'s first long-enough statement
+    in one corpus doc; q_contamination_eval must flag exactly that doc."""
     from scikg_spark.core.parsing import parse_stmt_blocks
-    from scikg_spark.ops.dedup import _EVAL_TSV, q_contamination_eval
+    from scikg_spark.ops.dedup import q_contamination_eval
 
-    with open(_EVAL_TSV) as fh:
+    with open(tsv_path) as fh:
         for block in parse_stmt_blocks(fh):
             if len(block["words"]) >= 8:
                 planted = " ".join(list(block["words"])[:8])
@@ -191,6 +191,37 @@ def test_contamination_eval_planted(spark, tmp_path):
     assert set(got) == {0}
     assert got[0]["n_shared_grams"] >= 1
     assert got[0]["n_bench_stmts"] >= 1
+
+
+def test_contamination_eval_planted(spark, tmp_path, reference_file):
+    """Against the REAL eval corpus (stmts-eval.tsv)."""
+    from scikg_spark.ops.dedup import _EVAL_TSV
+
+    _assert_flags_planted_doc(spark, tmp_path, reference_file(_EVAL_TSV))
+
+
+def test_contamination_eval_planted_local_tsv(spark, tmp_path, monkeypatch):
+    """The same check against a small stmts-format TSV, so it runs without
+    the reference: the gram table is materialized from that TSV into
+    tmp_path."""
+    import functools
+
+    from scikg_spark.ops import dedup
+
+    words = ("tumor necrosis factor alpha induces apoptosis "
+             "in human epithelial cells").split()
+    tsv = tmp_path / "stmts-eval.tsv"
+    tsv.write_text("\n".join([
+        "===== d1 stmt1 =====",
+        "\t".join(["WORD", *words]),
+        "\t".join(["POSTAG", *["NN"] * len(words)]),
+        "\t".join(["CAP", *["O"] * len(words)]),
+        "\t".join(["f", *["O"] * len(words)]),
+    ]) + "\n")
+    monkeypatch.setattr(dedup, "eval_gram_table", functools.partial(
+        dedup.eval_gram_table, tsv_path=str(tsv),
+        out_dir=str(tmp_path / "eval_grams")))
+    _assert_flags_planted_doc(spark, tmp_path, str(tsv))
 
 
 def test_contamination_eval_clean_corpus_is_empty(spark):
