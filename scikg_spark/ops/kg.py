@@ -399,7 +399,7 @@ def materialize_kg_tables(spark, sf_dir: str) -> str:
 def materialize_kg_production(spark, sf_dir: str, warehouse: str,
                               doc_buckets: int = 32) -> dict:
     """Production-shaped stage-boundary snapshots: tuples + edges written
-    through :class:`SnapshotCatalog` (atomic commit, per-partition lineage,
+    through :class:`SnapshotCatalog` (atomic commit, per-file lineage,
     time travel, expiry) partitioned by ``(kind, doc_bucket)`` — ``kind``
     (f/c) for consumer-side partition pruning, and a ``doc_id`` hash band so
     files stay bounded and writes parallelize at 10^12 docs (raise

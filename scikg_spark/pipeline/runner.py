@@ -20,11 +20,13 @@ from scikg_spark.pipeline.stage3 import link_entities
 from scikg_spark.pipeline.stage4 import SnapshotCatalog
 
 
-def _edges(tuples: DataFrame, phrase_map: DataFrame) -> DataFrame:
+def _edges(tuples: DataFrame, phrase_map: DataFrame,
+           map_rows: int | None) -> DataFrame:
     """tuples + subject/object entity ids, with Iceberg's bucket(url)
     partition transform expressed directly: co-locates a url's edges and
-    bounds files-per-partition at scale."""
-    return attach_entities(tuples, phrase_map).withColumn(
+    bounds files-per-partition at scale. ``map_rows`` is the committed
+    entity_map's manifest row count (None without a catalog)."""
+    return attach_entities(tuples, phrase_map, map_rows=map_rows).withColumn(
         "url_bucket", F.pmod(F.xxhash64("url"), F.lit(16)).cast("int"))
 
 
@@ -88,7 +90,9 @@ def run_pipeline(
         nodes = stage("entity_nodes", lambda: linked_nodes, force=True)
         phrase_map = stage("entity_map", lambda: linked_map, force=True)
 
-    stage("edges", lambda: _edges(tuples, phrase_map),
+    map_rows = (catalog.manifest("entity_map")["rows"]
+                if catalog is not None else None)
+    stage("edges", lambda: _edges(tuples, phrase_map, map_rows),
           partition_by=("kind", "url_bucket"))
     return out
 
@@ -173,11 +177,11 @@ def run_pipeline_incremental(
     tuples = out["tuples"]
     linked_nodes, linked_map = link_entities(tuples, use_lsh=use_lsh)
     catalog.write(linked_nodes, "entity_nodes")
-    catalog.write(linked_map, "entity_map")
+    map_rows = catalog.write(linked_map, "entity_map")["rows"]
     out["entity_nodes"] = catalog.read("entity_nodes")
     out["entity_map"] = phrase_map = catalog.read("entity_map")
 
-    edges = _edges(tuples, phrase_map)
+    edges = _edges(tuples, phrase_map, map_rows)
     catalog.write(edges, "edges", partition_by=("kind", "url_bucket"))
     out["edges"] = catalog.read("edges")
     return {"tables": out, **counts}

@@ -1,4 +1,4 @@
-"""Stage 4: table materialization with snapshots, per-partition lineage and
+"""Stage 4: table materialization with snapshots, per-file lineage and
 resumable restarts.
 
 On a production cluster these tables are Iceberg (``df.writeTo(catalog.table)
@@ -9,12 +9,15 @@ same contract on plain parquet directories:
   * atomic snapshot commit: data lands in ``<table>/snap-<id>/`` and the
     table-level ``manifest.json`` flips to the new snapshot last (readers
     always see a complete snapshot);
-  * per-partition lineage: every write records, per Spark partition,
-    ``(rows, checksum)`` (xor of row hashes) into the manifest — the
-    resume/metrics record the north rule asks for;
+  * one Spark job per commit: the write job itself observes the table's
+    ``rows`` and ``checksum`` (xor of per-row hashes), the per-file lineage
+    ``{"file", "rows"}`` comes from the parquet footers on the driver, and
+    the committed schema is stored in the manifest so a read infers nothing
+    — the resume/metrics record the north rule asks for;
   * resume: ``is_complete(table)`` lets a rerun skip finished stages and
     ``read`` serves the committed snapshot, so a killed pipeline restarts
-    from its last snapshot without recomputing completed work.
+    from its last snapshot without recomputing completed work;
+    :func:`verify_snapshot` re-derives the record on demand.
 
 The writer API is deliberately Iceberg-shaped so swapping the backend is a
 one-module change.
@@ -27,7 +30,36 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+
+def _row_hash(columns: list[str]):
+    """Per-row xxhash64 over ``columns`` cast to string; xor-folded into the
+    table checksum, so neither row order nor file layout changes it."""
+    return F.xxhash64(*[F.col(c).cast("string") for c in columns])
+
+
+def _file_rows(snap_dir: str) -> dict[str, int]:
+    """Rows per data file from the parquet footers, read on the driver (no
+    Spark job), keyed by the path under the snapshot dir, e.g.
+    ``kind=f/url_bucket=3/part-....parquet``."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for dirpath, _, files in os.walk(snap_dir):
+        for name in files:
+            if name.startswith((".", "_")):  # .crc sidecars, _SUCCESS
+                continue
+            path = os.path.join(dirpath, name)
+            out[os.path.relpath(path, snap_dir)] = pq.read_metadata(path).num_rows
+    return out
+
+
+def _write_json(path: str, obj: dict):
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(path + ".tmp", path)
 
 
 class SnapshotCatalog:
@@ -40,8 +72,14 @@ class SnapshotCatalog:
     def _table_dir(self, table: str) -> str:
         return os.path.join(self.base_dir, table)
 
+    def _snap_dir(self, table: str, snapshot_id: int) -> str:
+        return os.path.join(self._table_dir(table), f"snap-{snapshot_id}")
+
     def _manifest_path(self, table: str) -> str:
         return os.path.join(self._table_dir(table), "manifest.json")
+
+    def _history_path(self, table: str, snapshot_id: int) -> str:
+        return os.path.join(self._table_dir(table), f"manifest-{snapshot_id}.json")
 
     def manifest(self, table: str) -> dict | None:
         path = self._manifest_path(table)
@@ -50,28 +88,18 @@ class SnapshotCatalog:
         with open(path) as f:
             return json.load(f)
 
+    def _snapshot_manifest(self, table: str, snapshot_id: int) -> dict:
+        """The immutable history record of one committed snapshot."""
+        path = self._history_path(table, snapshot_id)
+        if not os.path.exists(path):
+            raise FileNotFoundError(
+                f"table {table!r} has no committed snapshot {snapshot_id}")
+        with open(path) as f:
+            return json.load(f)
+
     def is_complete(self, table: str) -> bool:
         m = self.manifest(table)
         return bool(m and m.get("status") == "committed")
-
-    # -- lineage ----------------------------------------------------------
-    @staticmethod
-    def _partition_lineage(df: DataFrame) -> list[dict]:
-        """Per-Spark-partition (rows, checksum) — one extra narrow job."""
-        stats = (
-            df.select(
-                F.spark_partition_id().alias("pid"),
-                F.xxhash64(*[F.col(c).cast("string") for c in df.columns]).alias("h"),
-            )
-            .groupBy("pid")
-            .agg(F.count("*").alias("rows"),
-                 F.expr("bit_xor(h)").alias("checksum"))
-            .collect()
-        )
-        return [
-            {"partition": r["pid"], "rows": r["rows"], "checksum": str(r["checksum"])}
-            for r in sorted(stats, key=lambda r: r["pid"])
-        ]
 
     # -- write / read -----------------------------------------------------
     def _snapshot_ids(self, table: str) -> list[int]:
@@ -88,68 +116,77 @@ class SnapshotCatalog:
                     pass
         return sorted(ids)
 
-    def write(self, df: DataFrame, table: str, partition_by=(),
-              with_lineage: bool = True) -> dict:
+    def write(self, df: DataFrame, table: str, partition_by=()) -> dict:
+        """Commit ``df`` as the table's next snapshot in ONE Spark job: the
+        write observes ``rows`` and ``checksum`` as it goes, and the per-file
+        lineage is read from the footers afterwards. Raises before the
+        pointer flips if the footers disagree with the observed count."""
         t0 = time.time()
         prev = self.manifest(table)
         # next id = max over ALL committed snapshots (not just the current
         # pointer) so a write after rollback() never overwrites history
         existing = self._snapshot_ids(table)
         snap_id = max([prev["snapshot_id"] if prev else 0] + existing) + 1
-        snap_dir = os.path.join(self._table_dir(table), f"snap-{snap_id}")
-        writer = df.write.mode("overwrite")
+        snap_dir = self._snap_dir(table, snap_id)
+        # committed column order: a parquet read puts partition columns last
+        schema = StructType(
+            [f for f in df.schema if f.name not in partition_by]
+            + [df.schema[c] for c in partition_by])
+        obs = Observation()
+        writer = df.observe(
+            obs, F.count(F.lit(1)).alias("rows"),
+            F.bit_xor(_row_hash(schema.names)).alias("checksum"),
+        ).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(snap_dir)
-        committed = self.spark.read.parquet(snap_dir)
-        lineage = self._partition_lineage(committed) if with_lineage else []
+        observed = obs.get
+        lineage = [{"file": name, "rows": n}
+                   for name, n in sorted(_file_rows(snap_dir).items())]
+        in_files = sum(p["rows"] for p in lineage)
+        if in_files != observed["rows"]:
+            raise RuntimeError(
+                f"snapshot {snap_dir}: data files hold {in_files} rows, the "
+                f"write observed {observed['rows']}; not committed")
         manifest = {
             "table": table,
             "snapshot_id": snap_id,
             "status": "committed",
-            "rows": sum(p["rows"] for p in lineage) if with_lineage else committed.count(),
+            "rows": observed["rows"],
+            "checksum": str(observed["checksum"] or 0),
+            "schema": schema.jsonValue(),
             "partition_by": list(partition_by),
             "lineage": lineage,
             "wall_ms": int((time.time() - t0) * 1000),
             "parent": prev["snapshot_id"] if prev else None,
         }
-        os.makedirs(self._table_dir(table), exist_ok=True)
         # immutable per-snapshot manifest first (the history record), then
         # the current pointer — the pointer replace is the atomic commit
-        hist = os.path.join(self._table_dir(table), f"manifest-{snap_id}.json")
-        with open(hist + ".tmp", "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(hist + ".tmp", hist)
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))  # atomic commit point
+        _write_json(self._history_path(table, snap_id), manifest)
+        _write_json(self._manifest_path(table), manifest)
         return manifest
 
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
         """Read the current snapshot, or TIME TRAVEL to ``snapshot_id``
-        (any snapshot in the history — old snap dirs are immutable)."""
+        (any snapshot in the history — old snap dirs are immutable). The
+        snapshot's own manifest supplies the schema, so no Spark job runs."""
         if snapshot_id is None:
             m = self.manifest(table)
             if not m or m.get("status") != "committed":
                 raise FileNotFoundError(
                     f"table {table!r} has no committed snapshot")
-            snapshot_id = m["snapshot_id"]
-        elif snapshot_id not in self._snapshot_ids(table):
-            raise FileNotFoundError(
-                f"table {table!r} has no committed snapshot {snapshot_id}")
-        snap_dir = os.path.join(self._table_dir(table), f"snap-{snapshot_id}")
-        return self.spark.read.parquet(snap_dir)
+        else:
+            m = self._snapshot_manifest(table, snapshot_id)
+        reader = self.spark.read
+        if "schema" in m:  # absent in manifests written before it was stored
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(self._snap_dir(table, m["snapshot_id"]))
 
     def history(self, table: str) -> list[dict]:
         """All committed snapshot manifests, oldest first (Iceberg
         ``table.history()`` shape: id, parent, rows, lineage)."""
-        out = []
-        for sid in self._snapshot_ids(table):
-            with open(os.path.join(self._table_dir(table),
-                                   f"manifest-{sid}.json")) as f:
-                out.append(json.load(f))
-        return out
+        return [self._snapshot_manifest(table, sid)
+                for sid in self._snapshot_ids(table)]
 
     def incremental_read(self, table: str, from_snapshot: int,
                          to_snapshot: int | None = None):
@@ -170,16 +207,8 @@ class SnapshotCatalog:
         """Repoint the table to an older snapshot (atomic pointer swap; no
         data is rewritten, and later writes get fresh ids — history keeps
         the abandoned snapshots)."""
-        if snapshot_id not in self._snapshot_ids(table):
-            raise FileNotFoundError(
-                f"table {table!r} has no committed snapshot {snapshot_id}")
-        with open(os.path.join(self._table_dir(table),
-                               f"manifest-{snapshot_id}.json")) as f:
-            manifest = json.load(f)
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))
+        manifest = self._snapshot_manifest(table, snapshot_id)
+        _write_json(self._manifest_path(table), manifest)
         return manifest
 
     def expire_snapshots(self, table: str, keep_last: int = 2) -> list[int]:
@@ -199,13 +228,11 @@ class SnapshotCatalog:
         for sid in ids:
             if sid in keep:
                 continue
-            shutil.rmtree(os.path.join(self._table_dir(table), f"snap-{sid}"),
-                          ignore_errors=True)
+            shutil.rmtree(self._snap_dir(table, sid), ignore_errors=True)
             # idempotent like the rmtree: a concurrently-expired or manually
             # deleted manifest must not abort the loop mid-expiry
             with contextlib.suppress(FileNotFoundError):
-                os.remove(os.path.join(self._table_dir(table),
-                                       f"manifest-{sid}.json"))
+                os.remove(self._history_path(table, sid))
             removed.append(sid)
         return removed
 
@@ -216,122 +243,26 @@ class SnapshotCatalog:
             f.write(json.dumps({"stage": stage, **payload}) + "\n")
 
 
-class PartitionedIncrementalWriter:
-    """Partition-level resume on top of SnapshotCatalog's directory layout:
-    rows land under ``<table>/parts/<key>=<value>/`` one partition-value at a
-    time, a sidecar manifest records completed values, and a rerun
-    anti-joins completed partitions out of the input before computing
-    anything for them (SURVEY.md §4 item 3). This is the finer-grained
-    complement to stage-level snapshot resume: a killed backfill restarts at
-    the first incomplete partition value."""
-
-    def __init__(self, spark: SparkSession, base_dir: str, table: str,
-                 partition_col: str):
-        self.spark = spark
-        self.table_dir = os.path.join(base_dir, table)
-        self.data_dir = os.path.join(self.table_dir, "parts")
-        self.partition_col = partition_col
-        self.manifest_path = os.path.join(self.table_dir, "parts_manifest.json")
-        os.makedirs(self.data_dir, exist_ok=True)
-
-    def completed(self) -> list:
-        if not os.path.exists(self.manifest_path):
-            return []
-        with open(self.manifest_path) as f:
-            return json.load(f)["completed"]
-
-    def _commit(self, values: list):
-        tmp = self.manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"partition_col": self.partition_col,
-                       "completed": sorted(values, key=str)}, f)
-        os.replace(tmp, self.manifest_path)
-
-    def pending_input(self, df: DataFrame) -> DataFrame:
-        """Anti-join completed partition values out of the input (string
-        compare: manifest values come from directory names)."""
-        done = self.completed()
-        if not done:
-            return df
-        done_df = self.spark.createDataFrame(
-            [(str(v),) for v in done], "__done string")
-        return df.join(
-            F.broadcast(done_df),
-            F.col(self.partition_col).cast("string") == F.col("__done"),
-            "left_anti")
-
-    def write(self, df: DataFrame, max_new: int | None = None) -> dict:
-        """Write the not-yet-completed partitions of ``df``: the pending input
-        is computed ONCE (partitionBy into a staging dir — not once per
-        partition value, which would re-run the upstream plan O(P) times),
-        then each partition directory is moved into place and committed
-        atomically. ``max_new`` limits how many partition values are taken
-        (used by the kill-mid-backfill test)."""
-        import shutil
-        from urllib.parse import unquote
-
-        pending = self.pending_input(df)
-        values = [r[0] for r in
-                  pending.select(self.partition_col).distinct().collect()]
-        if any(v is None or str(v) == "" for v in values):
-            # Spark maps these to the __HIVE_DEFAULT_PARTITION__ sentinel,
-            # which the string anti-join can never match -> endless recompute
-            raise ValueError(
-                f"partition column {self.partition_col!r} contains null/empty "
-                f"values; filter or default them before incremental writes")
-        values.sort(key=str)
-        if max_new is not None:
-            values = values[:max_new]
-            pending = pending.filter(F.col(self.partition_col).isin(values))
-        done = list(self.completed())
-        if not values:
-            return {"written_partitions": 0, "completed_total": len(done)}
-
-        staging = os.path.join(self.table_dir, ".staging")
-        shutil.rmtree(staging, ignore_errors=True)
-        pending.write.partitionBy(self.partition_col).parquet(staging)
-
-        written = 0
-        for name in sorted(os.listdir(staging)):
-            if not name.startswith(f"{self.partition_col}="):
-                continue  # _SUCCESS etc.
-            value = unquote(name.split("=", 1)[1])  # Spark percent-escapes
-            target = os.path.join(self.data_dir, name)
-            shutil.rmtree(target, ignore_errors=True)
-            os.replace(os.path.join(staging, name), target)
-            done.append(value)
-            self._commit(done)  # atomic per-partition commit point
-            written += 1
-        shutil.rmtree(staging, ignore_errors=True)
-        return {"written_partitions": written, "completed_total": len(done)}
-
-    def read(self) -> DataFrame:
-        return self.spark.read.option("basePath", self.data_dir).parquet(
-            os.path.join(self.data_dir, "*"))
-
-
 def verify_snapshot(catalog: SnapshotCatalog, table: str) -> dict:
-    """Re-derive lineage for a committed snapshot and compare the
-    partitioning-INDEPENDENT invariants against the manifest: total rows and
-    the global xor of row checksums (xor is associative, so the fold over
-    per-partition checksums is stable under any re-read split planning).
-    Detects on-disk corruption or a manifest out of sync with its data."""
+    """On-demand check of the current snapshot: re-read it, recompute
+    ``(rows, checksum)`` and compare them with the values the write job
+    observed, then compare every data file's footer rows with its lineage
+    entry. Detects on-disk corruption or a manifest out of sync with its
+    data; ``files`` names each data file that is missing, unexpected or
+    holds a different row count."""
     manifest = catalog.manifest(table)
     if not manifest or manifest.get("status") != "committed":
         return {"ok": False, "error": "no committed snapshot"}
-    expected = manifest["lineage"]
-    if not expected:
-        return {"ok": False, "error": "snapshot was written with_lineage=False"}
-    actual = catalog._partition_lineage(catalog.read(table))
-
-    def fold(parts):
-        rows = sum(p["rows"] for p in parts)
-        xor = 0
-        for p in parts:
-            xor ^= int(p["checksum"]) & (2**64 - 1)
-        return rows, xor
-
-    exp_rows, exp_xor = fold(expected)
-    act_rows, act_xor = fold(actual)
-    return {"ok": exp_rows == act_rows and exp_xor == act_xor,
-            "rows_expected": exp_rows, "rows_actual": act_rows}
+    df = catalog.read(table)
+    got = df.select(F.count(F.lit(1)).alias("rows"),
+                    F.bit_xor(_row_hash(df.columns)).alias("checksum")).first()
+    checksum = str(got["checksum"] or 0)
+    expected = {p["file"]: p["rows"] for p in manifest["lineage"]}
+    on_disk = _file_rows(catalog._snap_dir(table, manifest["snapshot_id"]))
+    files = sorted(f for f in expected.keys() | on_disk.keys()
+                   if expected.get(f) != on_disk.get(f))
+    return {"ok": (got["rows"] == manifest["rows"]
+                   and checksum == manifest["checksum"] and not files),
+            "rows_expected": manifest["rows"], "rows_actual": got["rows"],
+            "checksum_expected": manifest["checksum"],
+            "checksum_actual": checksum, "files": files}

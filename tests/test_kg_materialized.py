@@ -174,7 +174,7 @@ def test_production_materialization_partition_pruning(spark, tmp_path):
         spark, "/root/testdata/sf0.001", wh, doc_buckets=4)
     assert set(manifests) == {"kg_tuples", "kg_edges"}
     assert manifests["kg_tuples"]["partition_by"] == ["kind", "doc_bucket"]
-    assert manifests["kg_tuples"]["lineage"]  # per-partition lineage present
+    assert manifests["kg_tuples"]["lineage"]  # per-file lineage present
 
     cat = SnapshotCatalog(spark, wh)
     facts = cat.read("kg_tuples").filter("kind = 'f' AND doc_bucket = 2")

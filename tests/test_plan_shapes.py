@@ -149,3 +149,36 @@ def test_extraction_is_one_python_pass(spark, tmp_path):
     for name, df in frames.items():
         plan = _formatted(df)
         assert _n_ops(plan, "MapInPandas") == 1, (name, plan)
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return how many Spark jobs it
+    issued."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_commit_is_one_job_and_read_none(spark, tmp_path):
+    """A stage-4 commit is the write job alone: rows and checksum are
+    observed by it, lineage comes from the footers, and the stored schema
+    means reading a snapshot back infers nothing."""
+    from pyspark.sql import functions as F
+
+    from scikg_spark.pipeline.stage4 import SnapshotCatalog
+
+    cat = SnapshotCatalog(spark, str(tmp_path))
+    df = spark.range(200).select(
+        "id", (F.col("id") % 2).cast("string").alias("kind"),
+        (F.col("id") % 4).cast("int").alias("url_bucket"),
+        F.array("id").alias("ids"))
+    for table, partition_by in (("plain", ()),
+                                ("parted", ("kind", "url_bucket"))):
+        n = _jobs_in(spark, f"write-{table}",
+                     lambda: cat.write(df, table, partition_by=partition_by))
+        assert n == 1, (table, n)
+        assert _jobs_in(spark, f"read-{table}", lambda: cat.read(table)) == 0

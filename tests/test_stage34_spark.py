@@ -252,21 +252,59 @@ class TestCCNonConvergence:
                    if all(i not in p for p in edges))
 
 
-class TestSnapshotVerify:
-    def test_intact_snapshot_verifies(self, spark, tmp_path):
-        from pyspark.sql import functions as F
+def _plain_frame(spark):
+    return spark.range(50).withColumn("v", F.col("id") * 3), ()
 
+
+def _nested_partitioned_frame(spark):
+    """The tuples/statements shapes: struct and array columns, NULLs, and
+    partition columns that are not last in the frame."""
+    ids = spark.range(60)
+    return ids.select(
+        F.when(F.col("id") % 3 == 0, "c").otherwise("f").alias("kind"),
+        F.col("id").alias("stmt_id"),
+        F.struct(F.concat(F.lit("w"), F.col("id").cast("string")).alias("text"),
+                 F.array(F.col("id"), F.lit(None).cast("long")).alias("span"))
+        .alias("s_c"),
+        F.when(F.col("id") % 5 == 0, F.lit(None))
+        .otherwise(F.array(F.lit("a"), F.col("id").cast("string"))).alias("words"),
+        F.pmod(F.xxhash64("id"), F.lit(16)).cast("int").alias("url_bucket"),
+    ), ("kind", "url_bucket")
+
+
+def _empty_frame(spark):
+    return spark.createDataFrame([], "id long, v string"), ()
+
+
+class TestSnapshotVerify:
+    @pytest.mark.parametrize("frame", [
+        _plain_frame, _nested_partitioned_frame, _empty_frame],
+        ids=["plain", "nested_partitioned", "empty"])
+    def test_intact_snapshot_verifies(self, spark, tmp_path, frame):
         from scikg_spark.pipeline.stage4 import SnapshotCatalog, verify_snapshot
 
+        df, partition_by = frame(spark)
         cat = SnapshotCatalog(spark, str(tmp_path))
-        cat.write(spark.range(50).withColumn("v", F.col("id") * 3), "t")
-        assert verify_snapshot(cat, "t")["ok"]
+        manifest = cat.write(df, "t", partition_by=partition_by)
+        assert manifest["rows"] == df.count()
+        assert sum(p["rows"] for p in manifest["lineage"]) == manifest["rows"]
+        result = verify_snapshot(cat, "t")
+        assert result["ok"], result
+        assert result["rows_actual"] == manifest["rows"]
+        assert result["checksum_actual"] == manifest["checksum"]
+        # the stored schema serves reads: partition columns last, values
+        # unchanged by the round-trip
+        back = cat.read("t")
+        assert back.columns[len(back.columns) - len(partition_by):] \
+            == list(partition_by)
+        key = lambda r: tuple(str(r[c]) for c in sorted(df.columns))
+        assert sorted(map(key, back.collect())) == sorted(map(key, df.collect()))
+        if frame is _empty_frame:
+            assert manifest["rows"] == 0
 
     def test_corruption_detected(self, spark, tmp_path):
         import glob
         import os
-
-        from pyspark.sql import functions as F
 
         from scikg_spark.pipeline.stage4 import SnapshotCatalog, verify_snapshot
 
@@ -275,7 +313,25 @@ class TestSnapshotVerify:
         # delete one data file out from under the manifest
         victim = sorted(glob.glob(str(tmp_path / "t" / "snap-1" / "*.parquet")))[0]
         os.remove(victim)
-        assert not verify_snapshot(cat, "t")["ok"]
+        result = verify_snapshot(cat, "t")
+        assert not result["ok"]
+        assert result["files"] == [os.path.basename(victim)]
+
+    def test_footer_mismatch_aborts_commit(self, spark, tmp_path, monkeypatch):
+        """Footer rows that disagree with the write job's count raise before
+        the pointer flips: the table keeps its previous snapshot."""
+        from scikg_spark.pipeline import stage4
+
+        cat = stage4.SnapshotCatalog(spark, str(tmp_path))
+        cat.write(spark.range(5), "t")
+        real = stage4._file_rows
+        monkeypatch.setattr(stage4, "_file_rows", lambda d: {
+            name: n + 1 for name, n in real(d).items()})
+        with pytest.raises(RuntimeError, match="not committed"):
+            cat.write(spark.range(7), "t")
+        assert cat.manifest("t")["snapshot_id"] == 1
+        assert [m["snapshot_id"] for m in cat.history("t")] == [1]
+        assert cat.read("t").count() == 5
 
 
 class TestStarCC:

@@ -200,6 +200,21 @@ def test_contamination_eval_planted(spark, tmp_path, reference_file):
     _assert_flags_planted_doc(spark, tmp_path, reference_file(_EVAL_TSV))
 
 
+_EVAL_WORDS = ("tumor necrosis factor alpha induces apoptosis "
+               "in human epithelial cells").split()
+
+
+def _write_stmts_tsv(path, words):
+    """One stmts-format statement block over ``words``."""
+    path.write_text("\n".join([
+        "===== d1 stmt1 =====",
+        "\t".join(["WORD", *words]),
+        "\t".join(["POSTAG", *["NN"] * len(words)]),
+        "\t".join(["CAP", *["O"] * len(words)]),
+        "\t".join(["f", *["O"] * len(words)]),
+    ]) + "\n")
+
+
 def test_contamination_eval_planted_local_tsv(spark, tmp_path, monkeypatch):
     """The same check against a small stmts-format TSV, so it runs without
     the reference: the gram table is materialized from that TSV into
@@ -208,20 +223,48 @@ def test_contamination_eval_planted_local_tsv(spark, tmp_path, monkeypatch):
 
     from scikg_spark.ops import dedup
 
-    words = ("tumor necrosis factor alpha induces apoptosis "
-             "in human epithelial cells").split()
     tsv = tmp_path / "stmts-eval.tsv"
-    tsv.write_text("\n".join([
-        "===== d1 stmt1 =====",
-        "\t".join(["WORD", *words]),
-        "\t".join(["POSTAG", *["NN"] * len(words)]),
-        "\t".join(["CAP", *["O"] * len(words)]),
-        "\t".join(["f", *["O"] * len(words)]),
-    ]) + "\n")
+    _write_stmts_tsv(tsv, _EVAL_WORDS)
     monkeypatch.setattr(dedup, "eval_gram_table", functools.partial(
         dedup.eval_gram_table, tsv_path=str(tsv),
         out_dir=str(tmp_path / "eval_grams")))
     _assert_flags_planted_doc(spark, tmp_path, str(tsv))
+
+
+def test_eval_gram_table_fingerprints_content(tmp_path, monkeypatch):
+    """The gram table is rebuilt when the TSV's bytes change, never when
+    the same bytes are merely re-touched (the fingerprint is an md5 of the
+    content, not the file's path, size and mtime)."""
+    import os
+
+    import pandas as pd
+
+    from scikg_spark.core import parsing
+    from scikg_spark.ops.dedup import eval_gram_table
+
+    builds = []
+    real_parse = parsing.parse_stmt_blocks
+    monkeypatch.setattr(parsing, "parse_stmt_blocks",
+                        lambda fh: builds.append(1) or real_parse(fh))
+    tsv, out = tmp_path / "stmts-eval.tsv", str(tmp_path / "eval_grams")
+    words = list(_EVAL_WORDS)
+    _write_stmts_tsv(tsv, words)
+    pq = eval_gram_table(str(tsv), out)
+    first = set(pd.read_parquet(pq)["gram_h"])
+    assert len(builds) == 1 and first
+    with open(os.path.join(out, "FINGERPRINT")) as fh:
+        assert fh.read().startswith("v2:")
+
+    st = os.stat(tsv)
+    os.utime(tsv, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert eval_gram_table(str(tsv), out) == pq
+    assert len(builds) == 1
+
+    words[3] = "beta"
+    _write_stmts_tsv(tsv, words)
+    eval_gram_table(str(tsv), out)
+    assert len(builds) == 2
+    assert set(pd.read_parquet(pq)["gram_h"]) != first
 
 
 def test_contamination_eval_clean_corpus_is_empty(spark):
