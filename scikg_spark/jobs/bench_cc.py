@@ -7,9 +7,8 @@ candidate-pair graph, the keep-policy input) through:
 
   * driver   — union-find short-circuit (default threshold),
   * hashmin  — iterative hash-min propagation, ``driver_threshold=0``,
-  * star     — alternating large-star/small-star (O(log n) rounds),
 
-asserts all three produce the identical (id, comp) labeling, and prints one
+asserts both produce the identical (id, comp) labeling, and prints one
 JSON line with wall times -> recorded in BENCH/BASELINE.md.
 
     python -m scikg_spark.jobs.bench_cc --sf-dir /root/testdata/sf0.1
@@ -32,8 +31,7 @@ def main(argv=None):
 
     from scikg_spark.ops.dedup import _docs, q_minhash_dup_pairs
     from scikg_spark.pipeline.session import get_spark
-    from scikg_spark.pipeline.stage3 import (
-        connected_components, connected_components_star)
+    from scikg_spark.pipeline.stage3 import connected_components
 
     spark = get_spark(app_name="scikg-bench-cc", cores=args.cores,
                       shuffle_partitions=16)
@@ -58,7 +56,6 @@ def main(argv=None):
             run("driver", lambda: connected_components(edges, vertices)),
             run("hashmin", lambda: connected_components(
                 edges, vertices, driver_threshold=0)),
-            run("star", lambda: connected_components_star(edges, vertices)),
         ]
         base = results[0]["labels"]
         agree = {r["algo"]: r["labels"] == base for r in results}

@@ -149,17 +149,13 @@ def load_synonyms(spark, path: str = _SYNONYMS_PATH):
 
     with open(path) as fh:
         nid2tuple, _, _, _, _ = parse_label_file(fh)
-    rows = [(t[0][1].split("#")[0], t[2][1].split("#")[0])
-            for t in nid2tuple.values()]
-    # Arrow local relation (driver-side conversion) — the list form would
-    # parallelize through Python-RDD tasks just to ship a tiny dimension
-    # (set here so the plan does not depend on how the session was built)
-    import pandas as pd
+    from scikg_spark.pipeline.session import local_relation
 
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["phrase_a", "phrase_b"]),
-        schema="phrase_a string, phrase_b string")
+    tuples = nid2tuple.values()
+    return local_relation(
+        spark, {"phrase_a": [t[0][1].split("#")[0] for t in tuples],
+                "phrase_b": [t[2][1].split("#")[0] for t in tuples]},
+        "phrase_a string, phrase_b string")
 
 
 def _linked(spark, sf_dir, synonyms_path: str | None = None):
@@ -181,9 +177,9 @@ def _linked(spark, sf_dir, synonyms_path: str | None = None):
     syn = (load_synonyms(spark, synonyms_path)
            if synonyms_path is not None else None)
     nodes, phrase_map = link_entities(_tuples(spark, sf_dir), synonyms=syn)
-    # phrase_map is already a projection over link_entities' checkpointed
-    # phrase->entity join (round 6) — re-checkpointing it would spend one
-    # more job to materialize the same rows
+    # phrase_map is already materialized (a local relation from the driver
+    # path, else a projection over the distributed path's checkpointed
+    # phrase->entity join); re-checkpointing it would spend one more job
     entry = (nodes.localCheckpoint(), phrase_map, phrase_map.count())
     _LINK_CACHE[key] = entry
     return entry

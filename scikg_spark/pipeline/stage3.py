@@ -11,6 +11,18 @@ mention phrases into entities via
      hash-min joins (no GraphFrames dependency), ``localCheckpoint`` per
      round to cut lineage.
 
+Two plans, chosen by input size (*To Partition, or Not to Partition*,
+SIGMOD'21): a vocabulary of at most ``DRIVER_LINK_MENTIONS`` (2^14) distinct
+mentions is linked in driver Python from one Arrow-collected JVM probe and
+comes back as Arrow local relations — stage 3 of a 3k-page build, commits
+included, is 4 Spark jobs instead of 18. A larger one takes the distributed
+plan below, which repeats the probe's distinct pass (+1.4 s at 65k). Cold
+single runs of link + both commits on synthetic vocabularies, 4 cores,
+driver vs distributed (Python driver RSS growth): 4k mentions 7.2 vs 11.9 s
+(+42 MB), 16k 10.0 vs 15.0 s (+83 MB), 65k 19.6 vs 25.9 s (+258 MB), 262k
+58.0 vs 62.3 s (+1.05 GB). Time crosses over near 2^18, memory grows ~4 KB
+per mention; 2^14 keeps the driver's share under 100 MB.
+
 Scale design: minhash signatures are computed IN PLACE with JVM array
 expressions (array_min over transform of the shingle array — zero shuffle,
 zero Python, no shingle explode); LSH buckets are capped (``max_bucket``) so
@@ -22,7 +34,21 @@ strategy; candidate pairs are verified with a true-Jaccard JVM expression
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+
 from pyspark.sql import DataFrame, functions as F
+
+from scikg_spark.pipeline.session import local_relation
+
+# distinct-mention vocabularies up to this size are linked in driver Python
+DRIVER_LINK_MENTIONS = 1 << 14
+# LSH band buckets wider than this are dropped, not expanded into pairs
+MAX_BUCKET = 64
+
+
+def _norm(col: str):
+    # the normalized string mentions group by: lower, '_' -> ' '
+    return F.lower(F.regexp_replace(col, "_", " "))
 
 
 def mention_phrases(tuples: DataFrame) -> DataFrame:
@@ -37,28 +63,34 @@ def mention_phrases(tuples: DataFrame) -> DataFrame:
     return phrases.select(
         "phrase",
         F.xxhash64("phrase").alias("phrase_id"),
-        F.lower(F.regexp_replace("phrase", "_", " ")).alias("norm"),
+        _norm("phrase").alias("norm"),
     )
 
 
-def _shingles(name: str, k: int):
-    # k-char shingles of column `name`; short strings contribute themselves once
-    return F.expr(
+def _shingle_set(name: str, k: int = 3):
+    # distinct k-char shingles of column `name`; short strings contribute
+    # themselves once, so the set is never empty
+    return F.array_distinct(F.expr(
         f"case when length({name}) <= {k} then array({name}) "
         f"else transform(sequence(0, length({name}) - {k}), "
         f"i -> substring({name}, i + 1, {k})) end"
-    )
+    ))
 
 
-def exact_edges(phrases: DataFrame) -> DataFrame:
-    """Edges between phrases sharing the normalized string: star to the
-    min phrase_id per group (avoids quadratic within-group pairs)."""
-    grouped = phrases.groupBy("norm").agg(F.min("phrase_id").alias("root"))
-    return (
-        phrases.join(grouped, "norm")
-        .filter(F.col("phrase_id") != F.col("root"))
-        .select(F.col("root").alias("src"), F.col("phrase_id").alias("dst"))
-    )
+def band_keys(sh: str, n_hashes: int = 16, band_size: int = 4) -> list:
+    """MinHash band keys of the shingle-array column ``sh``, computed IN
+    PLACE with array expressions (array_min over transform — no shingle
+    explode, no shuffle): band b is the xxhash64 of signature slots
+    ``b*band_size ..``, slot i being the min xxhash64 of ``'seed{i}:' +
+    shingle``."""
+    assert n_hashes % band_size == 0
+
+    def slot(i):
+        return F.expr(f"array_min(transform({sh}, s -> "
+                      f"xxhash64(concat('seed{i}:', s))))")
+
+    return [F.xxhash64(*[slot(b * band_size + j) for j in range(band_size)])
+            for b in range(n_hashes // band_size)]
 
 
 def lsh_candidate_pairs(
@@ -66,29 +98,12 @@ def lsh_candidate_pairs(
     n_hashes: int = 16,
     band_size: int = 4,
     shingle_k: int = 3,
-    max_bucket: int = 64,
+    max_bucket: int = MAX_BUCKET,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs (src < dst) over the ``norm`` strings."""
-    assert n_hashes % band_size == 0
-    # signatures are computed IN PLACE with array expressions (array_min over
-    # transform) — no shingle explode, no distinct, no shuffle until the band
-    # self-join; at web scale this removes a full (id, shingle) shuffle
-    sh = phrases.select(
-        "phrase_id", F.array_distinct(_shingles("norm", shingle_k)).alias("sh"))
-    sig = sh.select("phrase_id", *[
-        F.expr(f"array_min(transform(sh, s -> "
-               f"xxhash64(concat('seed{i}:', s))))").alias(f"h{i}")
-        for i in range(n_hashes)
-    ])
-    n_bands = n_hashes // band_size
-    band_cols = []
-    for b in range(n_bands):
-        parts = [F.col(f"h{b * band_size + j}") for j in range(band_size)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*parts).alias("key")).alias(f"b{b}"))
-    banded = sig.select("phrase_id", F.explode(F.array(*band_cols)).alias("bk")) \
-                .select("phrase_id", "bk.band", "bk.key")
+    sh = phrases.select("phrase_id", _shingle_set("norm", shingle_k).alias("sh"))
+    banded = sh.select("phrase_id", F.posexplode(
+        F.array(*band_keys("sh", n_hashes, band_size))).alias("band", "key"))
     # cap bucket width: hot buckets (near-stopword phrases) are dropped, not
     # exploded into O(n^2) pairs. Round 6: pairs are expanded IN PLACE on
     # the collected bucket (bounded by the cap) instead of a band self-join
@@ -116,30 +131,22 @@ def verify_jaccard(
     """True shingle-set Jaccard filter on candidate pairs — pure JVM
     (array_intersect / array_union over distinct shingle arrays; no Python
     worker round-trip in the verification path)."""
-    sh = phrases.select(
-        "phrase_id", F.array_distinct(_shingles("norm", shingle_k)).alias("sh"))
+    sh = phrases.select("phrase_id", _shingle_set("norm", shingle_k).alias("sh"))
     withs = (
         pairs.join(sh.select(F.col("phrase_id").alias("src"),
                              F.col("sh").alias("sh_a")), "src")
         .join(sh.select(F.col("phrase_id").alias("dst"),
                         F.col("sh").alias("sh_b")), "dst")
     )
-    union_size = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        withs.withColumn(
-            "jaccard",
-            F.when(union_size == 0, F.lit(1.0))
-            .otherwise(F.size(F.array_intersect("sh_a", "sh_b")) /
-                       union_size.cast("double")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("src", "dst")
-    )
+    jaccard = (F.size(F.array_intersect("sh_a", "sh_b"))
+               / F.size(F.array_union("sh_a", "sh_b")).cast("double"))
+    return withs.filter(jaccard >= threshold).select("src", "dst")
 
 
-def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
-    """CC for a DRIVER-SIZED edge list: classic union-find, then comp = min
-    member id per component (identical labels to the distributed hash-min).
-    The mapping is broadcast back over ``vertices`` (which may be huge)."""
+def union_find(pairs) -> dict:
+    """Connected components of an edge list in driver Python: {node: min
+    node id of its component} for every node a pair touches — the labels
+    the distributed hash-min converges to."""
     parent: dict = {}
 
     def find(a):
@@ -148,8 +155,7 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
             a = parent[a]
         return a
 
-    for r in rows:
-        s, d = r[0], r[1]
+    for s, d in pairs:
         parent.setdefault(s, s)
         parent.setdefault(d, d)
         rs, rd = find(s), find(d)
@@ -158,29 +164,20 @@ def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
     root_min: dict = {}
     for node in parent:
         r = find(node)
-        m = root_min.get(r)
-        if m is None or node < m:
-            root_min[r] = node
-    spark = vertices.sparkSession
-    # Arrow local-relation build (round 6): createDataFrame over a plain
-    # Python list parallelizes through Python-RDD tasks — 32 Python workers
-    # launched to ship a broadcast-sized mapping (measured 7-35 CPU-s when
-    # workers are cold, on a sub-1k-row table). The pandas path converts to
-    # Arrow batches ON THE DRIVER and the executors decode pure JVM.
-    import pandas as pd
+        root_min[r] = min(node, root_min.get(r, node))
+    return {node: root_min[find(node)] for node in parent}
 
-    # the Arrow path is what makes this a LocalTableScan; set it here so the
-    # plan does not depend on how the session was built
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    mapping = spark.createDataFrame(
-        pd.DataFrame(
-            {"id": [int(n) for n in parent],
-             "comp": [int(root_min[find(n)]) for n in parent]},
-            dtype="int64"),
-        schema="id bigint, comp bigint")
+
+def _driver_union_find(rows, vertices: DataFrame) -> DataFrame:
+    """CC for a DRIVER-SIZED edge list: :func:`union_find`, its mapping
+    broadcast back over ``vertices`` (which may be huge) as an Arrow local
+    relation."""
+    comp = union_find(rows)
+    mapping = local_relation(vertices.sparkSession,
+                             {"id": list(comp), "_c": list(comp.values())},
+                             "id bigint, _c bigint")
     return (
-        vertices.join(F.broadcast(mapping.withColumnRenamed("comp", "_c")),
-                      "id", "left")
+        vertices.join(F.broadcast(mapping), "id", "left")
         .select("id", F.coalesce("_c", "id").alias("comp"))
     )
 
@@ -276,9 +273,7 @@ def synonym_phrase_edges(phrases: DataFrame, synonyms: DataFrame) -> DataFrame:
     """Synonym pairs (the reference's ``n: [C1, as, C2]`` label tuples,
     utils.py:638-644) as entity-linking edges: join both phrase columns onto
     the mention table by normalized string."""
-    a = synonyms.select(
-        F.lower(F.regexp_replace("phrase_a", "_", " ")).alias("na"),
-        F.lower(F.regexp_replace("phrase_b", "_", " ")).alias("nb"))
+    a = synonyms.select(_norm("phrase_a").alias("na"), _norm("phrase_b").alias("nb"))
     pa = phrases.select(F.col("norm").alias("na"), F.col("phrase_id").alias("src"))
     pb = phrases.select(F.col("norm").alias("nb"), F.col("phrase_id").alias("dst"))
     return (
@@ -289,75 +284,55 @@ def synonym_phrase_edges(phrases: DataFrame, synonyms: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(edges: DataFrame, vertices: DataFrame,
-                              max_iter: int = 25) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    converges in O(log n) ROUNDS regardless of component diameter — the
-    scale-path alternative to hash-min propagation for deep components
-    (near-duplicate chains at web scale).
-
-    large-star: for each node u, connect every neighbor v > u to
-    m = min(N(u) ∪ {u}); small-star: connect every neighbor v <= u (and u)
-    to m. Edges converge to a star around each component's minimum.
-    Returns (id, comp) like :func:`connected_components`.
-    """
-    cur = edges.filter(F.col("src") != F.col("dst")).select(
-        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-    ).distinct().localCheckpoint()
-
-    def neighborhoods(e):
-        # symmetric adjacency (u, v)
-        return e.union(e.select(F.col("dst").alias("src"),
-                                F.col("src").alias("dst")))
-
-    converged = False
-    for _ in range(max_iter):
-        adj = neighborhoods(cur)
-        # m(u) = min over N(u) ∪ {u}
-        m = adj.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m"))
-        # large-star: (v, m(u)) for v in N(u), v > u
-        large = (
-            adj.join(m, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-        )
-        # small-star: (v, m(u)) for v in N(u) with v <= u, plus (u, m(u))
-        small = (
-            adj.join(m, "src")
-            .filter(F.col("dst") <= F.col("src"))
-            .select(F.col("dst").alias("a"), F.col("m").alias("b"))
-            .union(m.select(F.col("src").alias("a"), F.col("m").alias("b")))
-        )
-        nxt = (
-            large.union(small)
-            .filter(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("src"),
-                    F.greatest("a", "b").alias("dst"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # converged when the edge set is stable (stars reached)
-        if nxt.count() == cur.count() and nxt.exceptAll(cur).limit(1).count() == 0:
-            cur = nxt
-            converged = True
-            break
-        cur = nxt
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components_star did not stabilize in {max_iter} "
-            f"rounds", RuntimeWarning, stacklevel=2)
-    # cur is a star forest: dst -> src(min). comp(v) = min partner; roots map
-    # to themselves; isolated vertices map to themselves.
-    comp_edges = cur.select(F.col("dst").alias("id"), F.col("src").alias("comp"))
-    comp_edges = comp_edges.groupBy("id").agg(F.min("comp").alias("comp"))
-    return (
-        vertices.join(comp_edges, "id", "left")
-        .select("id", F.coalesce("comp", "id").alias("comp"))
-    )
+def _link_on_driver(spark, probe, lsh_threshold: float,
+                    synonyms: DataFrame | None) -> tuple[DataFrame, DataFrame]:
+    """The distributed plan's semantics over the collected probe (an Arrow
+    table of phrase, phrase_id, norm and, with LSH, sh and keys): exact-norm
+    grouping, capped band buckets over one representative per norm, Jaccard
+    verify, synonyms, union-find. Both outputs are Arrow local relations."""
+    phrases = probe.column("phrase").to_pylist()
+    ids = probe.column("phrase_id").to_pylist()
+    norms = probe.column("norm").to_pylist()
+    root: dict = {}  # norm -> min phrase_id, the group's representative
+    for pid, norm in zip(ids, norms):
+        root[norm] = min(pid, root.get(norm, pid))
+    pairs = [(root[norm], pid) for pid, norm in zip(ids, norms)]
+    if "keys" in probe.column_names:
+        shingles: dict = {}
+        buckets = defaultdict(list)
+        for pid, norm, sh, keys in zip(ids, norms, probe.column("sh").to_pylist(),
+                                       probe.column("keys").to_pylist()):
+            if pid == root[norm]:
+                shingles[pid] = set(sh)
+                for band, key in enumerate(keys):
+                    buckets[band, key].append(pid)
+        candidates = {(a, b) for bucket in buckets.values()
+                      if 2 <= len(bucket) <= MAX_BUCKET
+                      for a in bucket for b in bucket if a < b}
+        for a, b in candidates:
+            sa, sb = shingles[a], shingles[b]
+            if len(sa & sb) / len(sa | sb) >= lsh_threshold:
+                pairs.append((a, b))
+    if synonyms is not None:
+        for na, nb in synonyms.select(_norm("phrase_a"), _norm("phrase_b")).collect():
+            if na in root and nb in root:
+                pairs.append((root[na], root[nb]))
+    comp = union_find(pairs)
+    entity = [comp[pid] for pid in ids]
+    canonical: dict = {}
+    for eid, norm in zip(entity, norms):
+        canonical[eid] = min(norm, canonical.get(eid, norm))
+    n_phrases = Counter(entity)
+    nodes = local_relation(
+        spark, {"entity_id": list(canonical),
+                "canonical": list(canonical.values()),
+                "n_phrases": [n_phrases[eid] for eid in canonical]},
+        "entity_id bigint, canonical string, n_phrases bigint")
+    phrase_map = local_relation(spark, {"phrase": phrases, "entity_id": entity},
+                                "phrase string, entity_id bigint")
+    # one partition each: a local relation splits over every core, and its
+    # snapshot would be that many small files for a broadcast-sized table
+    return nodes.coalesce(1), phrase_map.coalesce(1)
 
 
 def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
@@ -368,7 +343,21 @@ def link_entities(tuples: DataFrame, lsh_threshold: float = 0.8,
     entity_nodes: entity_id, canonical (deterministic min norm in the
     component), n_phrases. phrase_map: phrase -> entity_id. ``synonyms``
     optionally contributes curated pair edges (phrase_a, phrase_b).
+
+    The probe projects phrase, phrase_id, norm, shingle set and band keys
+    over the distinct mentions and collects ``DRIVER_LINK_MENTIONS + 1``
+    rows at most through Arrow; at or under the bound (the crossover is in
+    the module docstring) the rest runs on the driver. Above it the
+    distributed plan below runs and repeats the probe's distinct pass.
     """
+    probe = mention_phrases(tuples)
+    if use_lsh:
+        probe = probe.withColumn("sh", _shingle_set("norm")) \
+                     .withColumn("keys", F.array(*band_keys("sh")))
+    local = probe.limit(DRIVER_LINK_MENTIONS + 1).toArrow()
+    if local.num_rows <= DRIVER_LINK_MENTIONS:
+        return _link_on_driver(tuples.sparkSession, local, lsh_threshold, synonyms)
+
     from pyspark.sql.window import Window
 
     # Materialize the distinct-mention + window pass ONCE (round 6): the

@@ -1,7 +1,9 @@
 """Stage 3 (entity linking) and stage 4 (snapshots/lineage/resume) tests."""
 
+import io
 import json
 import os
+from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +11,6 @@ from pyspark.sql import functions as F
 from scikg_spark.pipeline.stage1 import build_pages_from_documents
 from scikg_spark.pipeline.stage3 import (
     connected_components,
-    exact_edges,
     lsh_candidate_pairs,
     link_entities,
     mention_phrases,
@@ -30,11 +31,6 @@ def phrases_df(spark, phrases):
 
 
 class TestLinking:
-    def test_exact_edges_group_case_variants(self, spark):
-        df = phrases_df(spark, ["T_cells", "t_cells", "T_CELLS", "B_cells"])
-        edges = exact_edges(df).collect()
-        assert len(edges) == 2  # star over the 3 t-cell variants
-
     def test_lsh_finds_near_duplicates(self, spark):
         df = phrases_df(spark, [
             "immune_response_in_mice", "immune_responses_in_mice",
@@ -65,6 +61,128 @@ class TestLinking:
         again, _ = link_entities(tuples)
         assert sorted(r.entity_id for r in nodes.collect()) == \
                sorted(r.entity_id for r in again.collect())
+
+
+# 100 norms sharing a 44-char prefix: every minhash band puts them in one
+# bucket wider than the cap
+_HOT_PREFIX = "a_long_shared_prefix_of_one_concept_mention_"
+
+_LINK_INPUTS = {
+    "case_variants": ["T_cells", "t_cells", "T_CELLS", "B_cells",
+                      "Immune_Response", "immune response"],
+    "near_duplicates": ["immune_response_in_mice", "immune_responses_in_mice",
+                        "immune_response_in_mouse", "completely_different_phrase",
+                        "tumor_growth_rate", "tumour_growth_rate",
+                        "regulatory_t_cell_differentiation_pathway",
+                        "regulatory_t_cell_differentiation_pathways"],
+    "non_ascii": ["naïve_T_cells", "naive_T_cells", "Größe_der_Zelle",
+                  "größe der zelle", "细胞生长速度", "细胞生长速率", "Ωmega_ratio"],
+}
+
+
+def _mention_tuples(spark, phrases):
+    """A tuples-shaped frame (only s_c/o_c are read): every phrase as a
+    subject, every other one as an object too, NULL objects elsewhere."""
+    return spark.createDataFrame(
+        [((p,), (phrases[i - 1],) if i % 2 else None)
+         for i, p in enumerate(phrases)],
+        "s_c struct<text:string>, o_c struct<text:string>")
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def _on_both_paths(monkeypatch, tuples, **kwargs):
+    """link_entities rows and types on the driver path, then with the
+    distributed path forced."""
+    from scikg_spark.pipeline import stage3
+
+    def link():
+        nodes, phrase_map = stage3.link_entities(tuples, **kwargs)
+        return {"local": all("LocalTableScan" in _plan(df)
+                             for df in (nodes, phrase_map)),
+                "nodes": sorted(map(tuple, nodes.collect())),
+                "map": sorted(map(tuple, phrase_map.collect())),
+                "types": (nodes.dtypes, phrase_map.dtypes)}
+
+    driver = link()
+    with monkeypatch.context() as m:
+        m.setattr(stage3, "DRIVER_LINK_MENTIONS", 0)
+        distributed = link()
+    assert driver.pop("local") and not distributed.pop("local")
+    return driver, distributed
+
+
+class TestDriverLinkPath:
+    """The driver-linked small vocabulary returns exactly the distributed
+    plan's rows and column types."""
+
+    @pytest.mark.parametrize("name", sorted(_LINK_INPUTS))
+    def test_paths_agree(self, spark, monkeypatch, name):
+        phrases = _LINK_INPUTS[name]
+        driver, distributed = _on_both_paths(
+            monkeypatch, _mention_tuples(spark, phrases))
+        assert driver == distributed
+        assert driver["types"] == (
+            [("entity_id", "bigint"), ("canonical", "string"),
+             ("n_phrases", "bigint")],
+            [("phrase", "string"), ("entity_id", "bigint")])
+        assert len(driver["map"]) == len(set(phrases))
+        ids = dict(driver["map"])
+        if name == "case_variants":
+            # the 3 t-cell variants and the 2 immune-response forms merge
+            assert len(driver["nodes"]) == 3
+        if name == "near_duplicates":
+            assert ids["regulatory_t_cell_differentiation_pathway"] == \
+                ids["regulatory_t_cell_differentiation_pathways"]
+
+    def test_hot_bucket_is_capped(self, spark, monkeypatch):
+        """A planted bucket over the cap is dropped on both paths: raising
+        the cap links its near-identical norms (Jaccard >= 0.8)."""
+        from scikg_spark.pipeline import stage3
+
+        hot = [f"{_HOT_PREFIX}{i}" for i in range(100)]
+        widest = (
+            phrases_df(spark, hot)
+            .select(stage3._shingle_set("norm").alias("sh"))
+            .select(F.posexplode(F.array(*stage3.band_keys("sh")))
+                    .alias("band", "key"))
+            .groupBy("band", "key").count().agg(F.max("count")).first()[0])
+        assert widest > stage3.MAX_BUCKET
+        tuples = _mention_tuples(spark, hot + ["cell", "Cell"])
+        driver, distributed = _on_both_paths(monkeypatch, tuples)
+        assert driver == distributed
+        monkeypatch.setattr(stage3, "MAX_BUCKET", len(hot))
+        uncapped, _ = stage3.link_entities(tuples)
+        assert uncapped.count() < len(driver["nodes"])
+
+    def test_paths_agree_without_lsh(self, spark, monkeypatch):
+        tuples = _mention_tuples(spark, _LINK_INPUTS["near_duplicates"]
+                                 + _LINK_INPUTS["case_variants"])
+        driver, distributed = _on_both_paths(monkeypatch, tuples, use_lsh=False)
+        assert driver == distributed
+        with_lsh, _ = _on_both_paths(monkeypatch, tuples)
+        assert len(with_lsh["nodes"]) < len(driver["nodes"])
+
+    def test_paths_agree_with_synonyms(self, spark, monkeypatch):
+        from scikg_spark.ops import kg
+
+        syn = kg.load_synonyms(spark)
+        tuples = _mention_tuples(
+            spark, ["Sort", "sort", "ORDER", "row", "Line", "batch",
+                    "batch_group", "unrelated"])
+        for use_lsh in (True, False):
+            driver, distributed = _on_both_paths(
+                monkeypatch, tuples, use_lsh=use_lsh, synonyms=syn)
+            assert driver == distributed
+            ids = dict(driver["map"])
+            assert ids["Sort"] == ids["sort"] == ids["ORDER"]
+            assert ids["row"] == ids["Line"]
+            assert ids["batch"] != ids["batch_group"]
 
 
 class TestSnapshots:
@@ -332,46 +450,6 @@ class TestSnapshotVerify:
         assert cat.manifest("t")["snapshot_id"] == 1
         assert [m["snapshot_id"] for m in cat.history("t")] == [1]
         assert cat.read("t").count() == 5
-
-
-class TestStarCC:
-    def _random_graph(self, spark, seed, n=60, m=50):
-        import random
-
-        rng = random.Random(seed)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        e = spark.createDataFrame(edges, "src long, dst long")
-        v = spark.createDataFrame([(i,) for i in range(n)], "id long")
-        return e, v
-
-    def test_matches_hashmin_on_random_graphs(self, spark):
-        from scikg_spark.pipeline.stage3 import (
-            connected_components, connected_components_star)
-
-        for seed in (1, 2, 3):
-            e, v = self._random_graph(spark, seed)
-            a = {r.id: r.comp for r in connected_components(e, v).collect()}
-            b = {r.id: r.comp for r in connected_components_star(e, v).collect()}
-            assert a == b, f"seed {seed}"
-
-    def test_long_chain_logarithmic(self, spark):
-        from scikg_spark.pipeline.stage3 import connected_components_star
-
-        # chain of 60: hash-min would need 30 two-hop rounds; star needs ~log
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(59)], "src long, dst long")
-        verts = spark.createDataFrame([(i,) for i in range(60)], "id long")
-        comp = connected_components_star(edges, verts, max_iter=12).collect()
-        assert {r.comp for r in comp} == {0}
-
-    def test_isolated_and_selfloop(self, spark):
-        from scikg_spark.pipeline.stage3 import connected_components_star
-
-        edges = spark.createDataFrame([(5, 5), (1, 2)], "src long, dst long")
-        verts = spark.createDataFrame([(i,) for i in (1, 2, 5, 9)], "id long")
-        comp = {r.id: r.comp for r in
-                connected_components_star(edges, verts).collect()}
-        assert comp == {1: 1, 2: 1, 5: 5, 9: 9}
 
 
 def test_run_pipeline_with_trained_ensemble(spark, tmp_path):
